@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Memo
+import graft.sources.Tables
+
 /** SparkEntry-facing HMM queries (SURVEY.md §2.1).
   *
   * The "labeled" hidden state for the supervised/decoding queries is a
@@ -128,14 +131,12 @@ object HmmQueries {
   // forward pass). Counts collected to the driver are O(K² + K·M).
   // -------------------------------------------------------------------
 
-  // Memoized per (dir, smooth): every model-driven query needs the
-  // same deterministic supervised model — train once per process, not
-  // once per query (saves two shuffles + a collect per query).
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, HmmModel]()
-
+  // Memoized per (events content, smooth): every model-driven query
+  // needs the same deterministic supervised model — train once per
+  // process, not once per query (saves two shuffles + a collect per query).
   def trainSupervisedModel(spark: SparkSession, dir: String, smooth: Double = 0.5): HmmModel =
-    modelCache.computeIfAbsent(s"$dir|$smooth", _ => trainUncached(spark, dir, smooth))
+    Memo.content("hmm.supervised", Some(Tables.contentKey(spark, dir, "events")), smooth)(
+      trainUncached(spark, dir, smooth))
 
   private def trainUncached(spark: SparkSession, dir: String, smooth: Double): HmmModel = {
     val rows = supervised(spark, dir).collect()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.sources.Tables
 
 /** Sequence construction: events → per-user time-ordered symbol
@@ -73,19 +74,14 @@ object Sequencer {
        |ORDER BY user_id, pos""".stripMargin
 
   /** Typed sequences for the HMM algorithms: one row per user with
-    * the full ordered symbol array. Persisted per dir: every
+    * the full ordered symbol array. Persisted per (session, dir): every
     * model-driven HMM query iterates the same sequences, and the
     * build (the pipeline's one wide op) should run once per dataset,
     * not once per query — exactly how an EM driver would cache its
     * input on a cluster.
     */
-  private val seqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dataset[(Long, Seq[Int])]]()
-
   def sequenceDs(spark: SparkSession, dir: String): Dataset[(Long, Seq[Int])] =
-    // keyed by (session, dir): the persisted Dataset is bound to its
-    // SparkContext (see Dedup.shingled for the same rule)
-    seqCache.computeIfAbsent(s"${System.identityHashCode(spark)}|$dir", _ =>
+    Memo.session("hmm.sequences", spark, dir)(
       sequencesFrom(spark, eventsWithSym(spark, dir)).persist())
 
   /** Sequences under an EXPLICIT event_type → symbol mapping — the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.sources.Tables
 
 /** Distributed BPE (byte-pair-encoding) tokenizer training — the
@@ -68,14 +69,10 @@ object Bpe {
   // Learned merges are pure data — memoized per (dir, merges) like
   // the supervised HMM model, so train/apply queries share one
   // training pass per process.
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String, String, Long)]]()
-
   private[graft] def learnedFor(
       spark: SparkSession, dir: String, merges: Int): Seq[(Int, String, String, Long)] =
-    mergeCache.computeIfAbsent(
-      s"${Tables.contentKey(spark, dir, "documents")}|$merges", _ =>
-        learnMerges(Tables.documents(spark, dir), merges))
+    Memo.content("bpe.merges", Some(Tables.contentKey(spark, dir, "documents")), merges)(
+      learnMerges(Tables.documents(spark, dir), merges))
 
   private[graft] def bpeTrainFor(docs: DataFrame, merges: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -152,11 +149,8 @@ object Bpe {
   // Result memoized per (session, dir, merges) through a lineage cut
   // (r18): the digest companion re-ran the whole dict-encode loop +
   // corpus join per invocation (the dedupSubstringApply precedent).
-  private val applyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def bpeApply(spark: SparkSession, dir: String, merges: Int = 10): DataFrame =
-    Dedup.memo(applyCache, spark, s"$dir|$merges")(
+    Memo.session("bpe.apply", spark, dir, merges)(
       graft.Lineage.cut(bpeApplyBuild(spark, dir, merges)))
 
   /** The un-memoized, un-cut encode build — exposed for the plan

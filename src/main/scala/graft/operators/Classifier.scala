@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.sources.Tables
 
 /** Distributed quality-classifier training — the fasttext-style
@@ -164,26 +165,19 @@ object Classifier {
     TrainResult(w, losses)
   }
 
-  // Weights are pure data — memoized per dir like the HMM model.
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, TrainResult]()
-
   /** Driver query: per-document smooth quality score against the
     * rule label it was distilled from. Bitwise deterministic since
     * r11 (fixed-point Newton accumulation; one memoized model per
     * process) — carries a pinned-literal oracle.
     */
   def qualityLr(spark: SparkSession, dir: String): DataFrame =
-    qualityLrFor(Tables.documents(spark, dir), Some(dir))
+    qualityLrFor(Tables.documents(spark, dir), Some(Tables.contentKey(spark, dir, "documents")))
 
   private[graft] def qualityLrFor(
       docs: DataFrame, memoKey: Option[String], iters: Int = 8): DataFrame = {
     val feats = featureDf(docs).cache()
-    def fit() = train(feats, iters)
-    val result = memoKey match {
-      case Some(key) => modelCache.computeIfAbsent(s"$key|$iters", _ => fit())
-      case None      => fit()
-    }
+    // weights are pure data — memoized per corpus content like the HMM model
+    val result = Memo.content("classifier.qualityLr", memoKey, iters)(train(feats, iters))
     val wCol = typedLit(result.weights.toSeq)
     feats
       .withColumn("z", aggregate(

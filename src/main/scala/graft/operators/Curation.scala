@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.sources.Tables
 
 /** Training-data curation operators over `documents` (SURVEY.md §2.4+):
@@ -388,10 +389,7 @@ object Curation {
     * decision by construction.
     */
   private[operators] def dispositionsFor(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memo(dispositionCache, spark, dir)(dispositionsBuild(spark, dir).persist())
-
-  private val dispositionCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    Memo.session("curation.dispositions", spark, dir)(dispositionsBuild(spark, dir).persist())
 
   private def dispositionsBuild(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

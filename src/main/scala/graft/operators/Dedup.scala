@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.functions.{arrayDot, arrayNorm}
 import graft.sources.Tables
 
@@ -48,48 +49,6 @@ object Dedup {
   // keeps off so the oracle stays exact.
   // -------------------------------------------------------------------
 
-  /** Distinct word-3-gram shingles, one row per (doc_id, shingle).
-    * Persisted per dir: higher-order shingle construction is
-    * interpreted (and Catalyst re-evaluates the inner `split` per
-    * lambda element), so build the relation once and let the
-    * ngram/minhash pipelines and their verification joins all reuse
-    * the materialized form.
-    */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Stable per-session cache-key prefix: a counter minted once per
-    * session OBJECT (identity-keyed WeakHashMap — the boxed-Long value
-    * holds no reference back to the session, so the entry is
-    * collectable). Unique for the JVM's lifetime, unlike
-    * identityHashCode, which can collide across sessions.
-    */
-  private val sessionIds = new java.util.WeakHashMap[SparkSession, java.lang.Long]()
-  private val sessionIdGen = new java.util.concurrent.atomic.AtomicLong()
-  private def sessionKey(spark: SparkSession): String = sessionIds.synchronized {
-    var id = sessionIds.get(spark)
-    if (id == null) { id = sessionIdGen.incrementAndGet(); sessionIds.put(spark, id) }
-    id.toString
-  }
-
-  /** Session-scoped memoization for the five persisted-relation caches
-    * below. Keyed by (session, dir, params): a persisted DataFrame is
-    * bound to its SparkContext — a dir-only key would hand a later
-    * session a plan on a stopped context. Entries whose context has
-    * STOPPED are swept on every access (their persisted blocks died
-    * with the context; before r12 they leaked plan trees for the JVM's
-    * lifetime in a session-cycling JVM). Each cache stays a separate
-    * map: a builder may memoize a sub-relation (ngram → shingle), and
-    * nested computeIfAbsent on one ConcurrentHashMap risks a
-    * same-bin recursive-update failure.
-    */
-  private[graft] def memo(cache: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-    cache.computeIfAbsent(s"${sessionKey(spark)}|$key", _ => build)
-  }
-
   // Lambda-bound tokenization (functions.ngramsFromTextExpr): splits
   // the document exactly once per row under any plan transformation —
   // an inline or alias-substituted `split(text, ' ')` inside the
@@ -102,8 +61,15 @@ object Dedup {
       _root_.graft.functions.ngramsFromTextExpr("text", 3))))
       .as("shingle"))
 
+  /** Distinct word-3-gram shingles, one row per (doc_id, shingle).
+    * Persisted per dir: higher-order shingle construction is
+    * interpreted (and Catalyst re-evaluates the inner `split` per
+    * lambda element), so build the relation once and let the
+    * ngram/minhash pipelines and their verification joins all reuse
+    * the materialized form.
+    */
   private def shingled(spark: SparkSession, dir: String): DataFrame =
-    memo(shingleCache, spark, dir)(
+    Memo.session("dedup.shingled", spark, dir)(
       shingledOf(Tables.documents(spark, dir)).persist())
 
   /** Per-doc distinct shingle arrays, rebuilt from the cached
@@ -128,8 +94,6 @@ object Dedup {
   // identity and the kernel degenerates to the original doc-level join.
   // -------------------------------------------------------------------
 
-  private val groupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** One row per distinct SHINGLEABLE text (≥ 3 tokens — sub-3-token
     * docs produce no shingles and never enter any Jaccard relation):
@@ -159,7 +123,7 @@ object Dedup {
     * filtered view over the same cached partitions.
     */
   private[graft] def allTextGroups(spark: SparkSession, dir: String): DataFrame =
-    memo(groupCache, spark, dir)(
+    Memo.session("dedup.allTextGroups", spark, dir)(
       Tables.documents(spark, dir)
         .filter(col("text").isNotNull)
         .groupBy(xxhash64(col("text")).as("tk1"), xxhash64(lit(42L), col("text")).as("tk2"))
@@ -173,20 +137,16 @@ object Dedup {
             .otherwise(raise_error(lit("textGroups: 128-bit digest collision"))).as("text"))
         .persist())
 
-  private val repShingleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Shingles of the contracted corpus: one (rep, shingle) relation,
     * identical in form to [[shingled]] but over representatives only.
     */
   private def repShingled(spark: SparkSession, dir: String): DataFrame =
-    memo(repShingleCache, spark, dir)(
+    Memo.session("dedup.repShingled", spark, dir)(
       shingledOf(textGroups(spark, dir)
         .select(col("rep").as("doc_id"), col("text")))
         .persist())
 
-  private val repPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Verified rep-level near-dup pairs (a_id < b_id are group reps,
     * jaccard rounded 6) — the contracted relation the expanded pair
@@ -195,7 +155,7 @@ object Dedup {
     */
   private[operators] def repPairsFor(spark: SparkSession, dir: String,
       threshold: Double): DataFrame =
-    memo(repPairCache, spark, s"$dir|$threshold")(
+    Memo.session("dedup.repPairs", spark, dir, threshold)(
       pairKernelFromShingles(repShingled(spark, dir), threshold).persist())
 
   /** Expansion of a rep-level pair relation back to doc-id pairs:
@@ -243,11 +203,8 @@ object Dedup {
   // caches, so the PPJoin build runs once per dataset instead of once
   // per caller (the pair set is tiny next to the corpus; at scale,
   // recomputing an exact similarity join per consumer is the waste).
-  private val ngramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def ngramJaccard(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
-    memo(ngramCache, spark, s"$dir|$threshold")(
+    Memo.session("dedup.ngramJaccard", spark, dir, threshold)(
       ngramJaccardCompute(spark, dir, threshold).persist())
 
   /** Contraction + expansion (round 14): the PPJoin kernel runs over
@@ -486,8 +443,6 @@ object Dedup {
     */
   val NearDupThreshold = 0.8
 
-  private val ccLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Memoized CC labels over the rep-level near-dup pair graph —
     * (doc_id = rep, canonical_id). The fixpoint is an iterative
@@ -500,7 +455,7 @@ object Dedup {
     */
   private[operators] def ccLabelsFor(spark: SparkSession, dir: String,
       threshold: Double): DataFrame =
-    memo(ccLabelCache, spark, s"$dir|$threshold") {
+    Memo.session("dedup.ccLabels", spark, dir, threshold) {
       val rp = repPairsFor(spark, dir, threshold).select("a_id", "b_id")
       graft.Lineage.cut(connectedComponentsFor(rp)._1)
     }
@@ -645,11 +600,9 @@ object Dedup {
   // candidate/cell caches, so the signature + banding build runs once
   // per dataset instead of once per caller (the r10 bench flagged the
   // cold rebuild as contam_minhash's 3.4× intra-run spread).
-  private val lshCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   def minhashLsh(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
-    memo(lshCache, spark, s"$dir|$threshold")(
+    Memo.session("dedup.minhashLsh", spark, dir, threshold)(
       minhashLshCompute(spark, dir, threshold).persist())
 
   private[graft] def minhashLshCompute(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
@@ -1184,11 +1137,9 @@ object Dedup {
     * distinct texts, the expansion over documents.
     */
   def dedupSubstringApply(spark: SparkSession, dir: String, minLen: Int = 40): DataFrame =
-    memo(applyCache, spark, s"$dir|$minLen")(
+    Memo.session("dedup.substringApply", spark, dir, minLen)(
       dedupSubstringApplyBuild(spark, dir, minLen).persist())
 
-  private val applyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   private def dedupSubstringApplyBuild(spark: SparkSession, dir: String, minLen: Int): DataFrame = {
     val L = minLen
@@ -1586,8 +1537,6 @@ object Dedup {
     verifyCosine(e, embeddingCandidatesFor(spark, e, threshold), threshold)
   }
 
-  private val vecGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Value contraction for the embedding corpus (round 14, engine-side
     * mirror of the contracted oracle): one row per distinct embedding
@@ -1597,7 +1546,7 @@ object Dedup {
     * whole group, matching the per-vector filter they replace.
     */
   private def vecGroups(spark: SparkSession, dir: String): DataFrame =
-    memo(vecGroupCache, spark, dir)(
+    Memo.session("dedup.vecGroups", spark, dir)(
       Tables.embeddings(spark, dir)
         .groupBy("embedding")
         .agg(min(col("vec_id")).as("rep"),
@@ -1610,9 +1559,6 @@ object Dedup {
   // The verified rep-level pair relation is memoized per (session,
   // dir, threshold) — repeated queries over one dataset pay the
   // k-means cell build once, same rule as the shingle caches.
-  private val cellCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** Contracted (round 14): the cell-blocked pairwise join runs over
     * DISTINCT embeddings (rep per value), then clone images and
     * C(sz,2) cliques at cos_sim exactly 1.0 expand linearly in the
@@ -1630,8 +1576,8 @@ object Dedup {
     val reps = g.select(col("rep").as("vec_id"), col("embedding"), col("nrm"))
     // Lineage.cut, not persist (r18): the verified pair relation's
     // lineage embeds the k-means cell build — re-analyzed per reuse
-    // (same class as the semCache fix above)
-    val rp = memo(cellCache, spark, s"$dir|$threshold")(
+    // (same class as the semanticDedup cut below)
+    val rp = Memo.session("dedup.embeddingPairs", spark, dir, threshold)(
       graft.Lineage.cut(
         verifyCosine(reps, embeddingCandidatesFor(spark, reps, threshold), threshold)))
     expandPairs(rp, g, "cos_sim", lit(1.0)).orderBy("a_id", "b_id")
@@ -1714,9 +1660,6 @@ object Dedup {
   // The verdict relation is deterministic per (dir, τ) — memoized and
   // persisted per session like the candidate/cell caches, so repeated
   // queries pay the k-means + connected-components build once.
-  private val semCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   // Lineage.cut, not persist (r18): the verdict's lineage embeds the
   // k-means assign + CC fixpoint tree — ~10 MB of formatted plan that
   // Catalyst re-analyzes on EVERY reuse (the digest companion, each
@@ -1724,7 +1667,7 @@ object Dedup {
   // at sf0.1 (guide §7.3 "very large plans"). The cut stores an O(1)
   // LogicalRDD; content is identical (cut materializes the same rows).
   def semanticDedup(spark: SparkSession, dir: String, threshold: Double = 0.45): DataFrame =
-    memo(semCache, spark, s"$dir|$threshold")(
+    Memo.session("dedup.semantic", spark, dir, threshold)(
       graft.Lineage.cut(semanticDedupFor(spark,
         Tables.embeddings(spark, dir).select(
           col("vec_id"), col("embedding"), arrayNorm(col("embedding")).as("nrm"))

@@ -5,6 +5,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.sources.Tables
 
 /** Multimodal column plumbing (SURVEY.md §2.7): media as opaque
@@ -512,10 +513,8 @@ object Multimodal {
     * pigeonhole self-join below would otherwise decode every image
     * TWICE even within one call.
     */
-  private val mediaGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private[graft] def mediaHashGroups(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memo(mediaGroupCache, spark, dir)(
+    Memo.session("multimodal.imageGroups", spark, dir)(
       hashGroupsOf(spark, mediaBinaryTable(spark, dir).filter(_.media_type == "bmp"),
         blockMeanHash).persist())
 
@@ -697,10 +696,8 @@ object Multimodal {
   def mediaAudioDedup(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
     audioDedupFromGroups(audioHashGroups(spark, dir), maxHamming)
 
-  private val audioGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private[graft] def audioHashGroups(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memo(audioGroupCache, spark, dir)(
+    Memo.session("multimodal.audioGroups", spark, dir)(
       hashGroupsOf(spark, mediaBinaryTable(spark, dir).filter(_.media_type == "wav"),
         audioFingerprint).persist())
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.functions.{arrayDot, arrayNorm}
 import graft.sources.Tables
 
@@ -167,17 +168,17 @@ object Similarity {
       // data from deterministic seeds — memoized per (dir, params)
       // like the PQ codebooks (r18), so repeated queries skip the
       // seed collect + Lloyd action chain.
-      val centroids = ivfCentCache.computeIfAbsent(
-        s"${Tables.contentKey(spark, dir, "embeddings")}|$numClusters|$lloydIters", _ => {
-          val n = e.count()
-          // deterministic seeding: evenly-strided vec_ids
-          val stride = math.max(1L, n / numClusters)
-          val seeds: Array[Seq[Double]] = e
-            .filter(col("vec_id") % stride === 0).orderBy("vec_id").limit(numClusters)
-            .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))")).collect()
-            .map(_.getSeq[Double](0))
-          KMeans.lloyd(spark, e, seeds, lloydIters)
-        })
+      val centroids = Memo.content("similarity.ivfCentroids",
+          Some(Tables.contentKey(spark, dir, "embeddings")), numClusters, lloydIters) {
+        val n = e.count()
+        // deterministic seeding: evenly-strided vec_ids
+        val stride = math.max(1L, n / numClusters)
+        val seeds: Array[Seq[Double]] = e
+          .filter(col("vec_id") % stride === 0).orderBy("vec_id").limit(numClusters)
+          .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))")).collect()
+          .map(_.getSeq[Double](0))
+        KMeans.lloyd(spark, e, seeds, lloydIters)
+      }
       val index = KMeans.assign(e, KMeans.centDf(spark, centroids))
       // nprobe nearest clusters per query, via the same broadcast
       // centroid relation: per-(query, cluster) distance → window
@@ -324,12 +325,9 @@ object Similarity {
   // Result memoized per (session, dir, params) through a lineage cut
   // (r18): the digest companion re-ran the assignment join + argmin
   // per invocation (the dedupSubstringApply precedent).
-  private val pqResultCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def pqQuantize(spark: SparkSession, dir: String,
       m: Int = 4, ksub: Int = 16, iters: Int = 3): DataFrame =
-    Dedup.memo(pqResultCache, spark, s"$dir|$m|$ksub|$iters")(
+    Memo.session("similarity.pqQuantize", spark, dir, m, ksub, iters)(
       graft.Lineage.cut(pqQuantizeBuild(spark, dir, m, ksub, iters)))
 
   /** Un-memoized, un-cut build — exposed for the plan audit
@@ -348,9 +346,6 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("pq_code"), col("sse8"))
       .orderBy("vec_id")
   }
-
-  private val pqBookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Seq[Double]]]]()
 
   /** The PQ internals — (embeddings, codebook (sub, cluster, cent,
     * cnorm2), assignment (vec_id, sub, code, sq)) — exposed for the
@@ -390,10 +385,7 @@ object Similarity {
           .select(col("vec_id"), col("sv").as("embedding"), col("snrm").as("nrm"))
         KMeans.lloyd(spark, se, KMeans.hashSeeds(se, ksub), iters)
       }.toArray
-    val cents = memoKey match {
-      case Some(key) => pqBookCache.computeIfAbsent(s"$key|$m|$ksub|$iters", _ => train())
-      case None      => train()
-    }
+    val cents = Memo.content("similarity.pqCodebooks", memoKey, m, ksub, iters)(train())
     val codebook = (0 until m).map { mm =>
       KMeans.centDf(spark, cents(mm)).withColumn("sub", lit(mm))
     }.reduce(_ unionByName _)
@@ -485,10 +477,7 @@ object Similarity {
   private[graft] def ivfPqIndexRelations(spark: SparkSession, e: DataFrame,
       kCoarse: Int, memoKey: Option[String]): (DataFrame, DataFrame, DataFrame) = {
     def trainCoarse() = KMeans.lloyd(spark, e, KMeans.hashSeeds(e, kCoarse), iters = 3)
-    val cents = memoKey match {
-      case Some(key) => ivfPqCoarseCache.computeIfAbsent(s"$key|$kCoarse", _ => trainCoarse())
-      case None      => trainCoarse()
-    }
+    val cents = Memo.content("similarity.ivfPqCoarse", memoKey, kCoarse)(trainCoarse())
     val centDf = KMeans.centDf(spark, cents)
     val assigned = KMeans.assign(e, centDf)
     // residual relation: vector minus its coarse centroid
@@ -577,22 +566,11 @@ object Similarity {
     * the spec can assert the artifact layout on disk. */
   private[graft] def annIndexScratchDir(spark: SparkSession, dir: String): String = {
     val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|${Sketches.sessionScratchKey(spark)}".getBytes("UTF-8"))
+      .digest(s"$dir|${Memo.sessionId(spark)}".getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.take(16)
     new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft_ann_idx_${tag}_p${ProcessHandle.current().pid()}").toString
   }
-
-  private val ivfPqCoarseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Double]]]()
-
-  // r18: knn_ivf / kmeans_clusters centroid memos (same contract as
-  // ivfPqCoarseCache — centroids are pure data from deterministic
-  // seeds, keyed by (dir, params))
-  private val ivfCentCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Double]]]()
-  private val kmCentCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Double]]]()
 
   /** User-facing k-means clustering report: per-cluster size and
     * inertia from the shared deterministic Lloyd machinery (hash
@@ -609,9 +587,10 @@ object Similarity {
       k: Int = 8, iters: Int = 3): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), arrayNorm(col("embedding")).as("nrm"))
-    val cents = kmCentCache.computeIfAbsent(
-      s"${Tables.contentKey(spark, dir, "embeddings")}|$k|$iters",
-      _ => KMeans.lloyd(spark, e, KMeans.hashSeeds(e, k), iters))
+    // centroids are pure data from deterministic seeds, like knnIvf's
+    val cents = Memo.content("similarity.kmeansCentroids",
+      Some(Tables.contentKey(spark, dir, "embeddings")), k, iters)(
+      KMeans.lloyd(spark, e, KMeans.hashSeeds(e, k), iters))
     KMeans.assign(e, KMeans.centDf(spark, cents))
       .join(broadcast(KMeans.centDf(spark, cents)), "cluster")
       .withColumn("d",

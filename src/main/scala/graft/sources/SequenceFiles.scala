@@ -175,6 +175,6 @@ object SequenceFiles {
       .digest(dir.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(16)
     new java.io.File(System.getProperty("java.io.tmpdir"),
       s"${name}_${tag}_p${ProcessHandle.current().pid()}" +
-        s"_s${System.identityHashCode(spark)}").toString
+        s"_s${graft.Memo.sessionId(spark)}").toString
   }
 }

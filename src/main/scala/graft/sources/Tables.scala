@@ -17,15 +17,16 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Cache key for the (dir)-keyed pure-data caches (Lloyd centroids,
-    * PQ codebooks, BPE merge tables): `dir` plus a cheap content
-    * signature — (leaf name, length, mtime) per backing file, order-
-    * independent fold — of the table the cached model derives from.
-    * Those caches survive across sessions by design, but /root/testdata
-    * HAS been regenerated mid-JVM before (round 8, CLAUDE.md), which
+  /** Source key for the content-scoped memos ([[graft.Memo.content]]:
+    * trained models, Lloyd centroids, PQ codebooks, BPE merge tables):
+    * `dir` plus a cheap content signature of the table the cached value
+    * derives from — a 64-bit hash of (leaf name, length, mtime) per
+    * backing file, folded over the files in name order. Those memos
+    * survive across sessions by design, but the test corpora HAVE been
+    * regenerated under a live JVM before (round 8, CLAUDE.md), which
     * would silently serve stale models; with the signature in the key
-    * a regeneration is a cache MISS, never a stale hit (r19, ADVICE
-    * r18). One FS listing per cache probe — nothing at scale.
+    * a regeneration is a cache MISS, never a stale hit. One FS listing
+    * per cache probe — nothing at scale.
     */
   def contentKey(spark: SparkSession, dir: String, name: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
@@ -34,9 +35,9 @@ object Tables {
       if (st.isDirectory)
         fs.listStatus(st.getPath).sortBy(_.getPath.getName)
           .map(sig).foldLeft(1L)((a, h) => a * 1000003L + h)
-      else scala.util.hashing.MurmurHash3
-        .stringHash(s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
-        .toLong
+      else java.nio.ByteBuffer.wrap(java.security.MessageDigest.getInstance("MD5")
+        .digest(s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}".getBytes("UTF-8")))
+        .getLong
     val s0 =
       try { if (fs.exists(p)) sig(fs.getFileStatus(p)) else 0L }
       catch { case _: java.io.IOException => 0L }

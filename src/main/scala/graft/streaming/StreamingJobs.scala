@@ -127,9 +127,9 @@ object StreamingJobs {
     * is pinned by the caller-owned checkpoint across restarts, and
     * the recovery specs drive those with explicit session conf.
     *
-    * Measured (StreamProbe, sf0.1, local[32], shuffle.partitions
-    * sweep 32→1): every stateful entry runs 1.4-2× faster at 1
-    * partition than at 32 on the 2 MB replay (stream_join 4.0→2.9 s,
+    * Measured (sf0.1, local[32], shuffle.partitions swept 32→1 before
+    * this override existed): every stateful entry runs 1.4-2× faster
+    * at 1 partition than at 32 on the 2 MB replay (stream_join 4.0→2.9 s,
     * sessionize 4.5→2.3 s, doc_dedup 8.1→4.6 s, topk 2.7→1.4 s,
     * session_agg 2.8→1.3 s, dedup 3.1→1.5 s) — per-partition
     * micro-batch overhead, exactly the r18 scaling block's
@@ -728,12 +728,9 @@ object StreamingJobs {
   // dir, glob) like the other shared bases (the dedupSubstringApply
   // precedent); the cut stores an O(1) LogicalRDD and lets the sink
   // view drop immediately (no per-invocation catalog growth).
-  private val sswCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def sessionWindowStream(spark: SparkSession, dir: String,
       glob: String = "events.parquet"): DataFrame =
-    graft.operators.Dedup.memo(sswCache, spark, s"$dir|$glob")(
+    graft.Memo.session("streaming.sessionWindow", spark, dir, glob)(
       sessionWindowStreamRun(spark, dir, glob))
 
   private def sessionWindowStreamRun(spark: SparkSession, dir: String,

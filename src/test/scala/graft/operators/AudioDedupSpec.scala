@@ -114,5 +114,10 @@ class AudioDedupSpec extends AnyFunSuite {
     // and the cached relation is actually persisted (decode-once)
     assert(Multimodal.audioHashGroups(spark, dir).storageLevel.useMemory)
     assert(Multimodal.mediaHashGroups(spark, dir).storageLevel.useMemory)
+    // another session gets its own relation, bound to that session
+    val other = spark.newSession()
+    val otherAudio = Multimodal.audioHashGroups(other, dir)
+    assert(!(otherAudio eq Multimodal.audioHashGroups(spark, dir)) && (otherAudio.sparkSession eq other))
+    assert(Multimodal.audioHashGroups(other, dir) eq otherAudio)
   }
 }

@@ -302,5 +302,13 @@ class CurationSpec extends AnyFunSuite {
       "the dispositions frame must be persisted, not a replayable plan")
     assert(Dedup.dedupSubstringApply(spark, sfDir).storageLevel.useMemory,
       "the apply frame must be persisted, not a replayable plan")
+    // the shared text-family bases, down the nested memo chain
+    // (repPairsFor → repShingled → textGroups → allTextGroups)
+    assert(Dedup.repPairsFor(spark, sfDir, 0.8) eq Dedup.repPairsFor(spark, sfDir, 0.8))
+    assert(Dedup.allTextGroups(spark, sfDir) eq Dedup.allTextGroups(spark, sfDir))
+    assert(Dedup.ngramJaccard(spark, sfDir) eq Dedup.ngramJaccard(spark, sfDir))
+    assert(Dedup.minhashLsh(spark, sfDir) eq Dedup.minhashLsh(spark, sfDir))
+    assert(!(Dedup.allTextGroups(spark.newSession(), sfDir) eq Dedup.allTextGroups(spark, sfDir)),
+      "another session must build its own persisted base")
   }
 }
