@@ -19,6 +19,14 @@ final case class HmmModel(
     stateNames: Option[IndexedSeq[String]] = None,
     symbolNames: Option[IndexedSeq[String]] = None) {
 
+  /** The flat tables the per-sequence kernels read instead of π/A/B
+    * (see [[HmmAlgorithms]]). Built on first use, once per model
+    * instance: once per broadcast per executor JVM, and again for
+    * each EM iteration's new model. Never serialized. The kernels
+    * assume π/A/B are not mutated after first use.
+    */
+  @transient private[hmm] lazy val view: HmmModel.View = new HmmModel.View(this)
+
   /** Hidden-state name (defaults to s0..s{K-1} when no map given). */
   def stateName(i: Int): String = stateNames.map(_(i)).getOrElse(s"s$i")
 
@@ -88,6 +96,26 @@ final case class HmmModel(
 }
 
 object HmmModel {
+
+  /** Model tables in the layouts the kernels sweep, with ln 0 = -∞:
+    * each kernel's innermost loop reads one contiguous run.
+    */
+  private[hmm] final class View(m: HmmModel) {
+    private val k = m.numStates
+    private def ln(x: Double): Double = if (x <= 0) Double.NegativeInfinity else math.log(x)
+    /** ln π(i). */
+    val logPi: Array[Double] = m.pi.map(ln)
+    /** A(q, r) at q·K + r (row-major). */
+    val aFlat: Array[Double] = Array.tabulate(k * k)(c => m.a(c / k)(c % k))
+    /** A(q, j) at j·K + q (transposed: column j contiguous). */
+    val aT: Array[Double] = Array.tabulate(k * k)(c => m.a(c % k)(c / k))
+    /** ln A(q, j) at j·K + q. */
+    val logAT: Array[Double] = aT.map(ln)
+    /** B(j, o) at o·K + j (by symbol: the K emissions of o contiguous). */
+    val bT: Array[Double] = Array.tabulate(m.numSymbols * k)(c => m.b(c % k)(c / k))
+    /** ln B(j, o) at o·K + j. */
+    val logBT: Array[Double] = bT.map(ln)
+  }
 
   /** Seeded random row-stochastic model (reference:
     * BaumWelchUtils.BuildRandomModel). Deterministic for a given seed.

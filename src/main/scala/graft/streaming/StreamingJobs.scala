@@ -139,6 +139,10 @@ object StreamingJobs {
     val key = "spark.sql.shuffle.partitions"
     val target = spark.conf.getOption("graft.stream.stateTargetInputBytes")
       .map(_.toLong).getOrElse(16L << 20)
+    // The input-bytes default sizes state by what is replayed, not by
+    // what is held: a long-window stream-stream join keeps every row
+    // of its window in state, so it can need far more partitions than
+    // its input bytes suggest. Set graft.stream.statePartitions then.
     val parts = spark.conf.getOption("graft.stream.statePartitions").map(_.toInt)
       .getOrElse(math.max(1L,
         (matchedInputBytes(spark, dir, glob) + target - 1) / target).toInt)
